@@ -1457,9 +1457,9 @@ def _q_chunk_giant_doc(spark, sf_dir):
     100k sentences) that a naive chunk-then-embed pipeline would process
     on a single executor end to end.  The chunker UDF emits the chunk
     ARRAY for the one row, then ``posexplode`` fans it out to ~2.9k
-    chunk rows JVM-side *before* the embed stage, so a
-    ``chunk_partitions`` repartition can rebalance the expensive work
-    (operators/chunking.py:22-27,194-197).  Every sentence costs exactly
+    chunk rows JVM-side *before* the embed stage, so a repartition of
+    the chunk rows can rebalance the expensive work
+    (operators/chunking.py, module docstring).  Every sentence costs exactly
     k tokens, which makes the greedy fold closed-form — the oracle is
     pure generate_series arithmetic, no recursive CTE (the r7-verdict
     ask #6 variant of chunk_documents).  Fixture synthesis is bounded

@@ -4,13 +4,13 @@ Mirrors the reference's environment-driven ``Settings``
 (``/root/reference/inception/config.py:5-36``): same knobs, same defaults, same
 ranges — but as a plain dataclass consumed by engine operators instead of a
 pydantic HTTP-service config.  Knobs that only make sense for an HTTP service
-(CORS, Sentry, metrics auth) are intentionally absent; Spark-facing knobs
-(``arrow_max_records``, ``chunk_partitions``) are additions for scale.
+(CORS, Sentry, metrics auth) are intentionally absent.  Arrow batch sizing is
+a session setting (``session.build_session``), not an engine knob.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -32,9 +32,6 @@ class EngineConfig:
     # --- retrieval prefixes (reference embedding_service.py:90,162) ---
     lead_document: str = "search_document: "
     lead_query: str = "search_query: "
-    # --- Spark-scale knobs (no reference equivalent; §4 of SURVEY.md) ---
-    arrow_max_records: int = 512   # cap Arrow batch rows for huge documents
-    chunk_partitions: int = 0      # >0: repartition exploded chunks before embed
 
     @property
     def num_overlap_sentences(self) -> int:

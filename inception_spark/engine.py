@@ -41,7 +41,6 @@ from inception_spark.operators.chunking import chunk_documents
 from inception_spark.operators.encoding import (
     Encoder,
     HashingStubEncoder,
-    default_encoder,
     make_embed_udf,
 )
 
@@ -176,40 +175,18 @@ class EmbeddingEngine:
         spark: SparkSession,
         config: EngineConfig = DEFAULT_CONFIG,
         encoder: Encoder | None = None,
-        encoder_kind: str | None = None,
     ):
         self.spark = spark
         self.config = config
-        # driver-side encoder (query path); executor side rebuilds by kind
+        # one encoder for both paths: used here for queries, shipped to the
+        # executors in the embed UDF closure
         self.encoder = encoder if encoder is not None else HashingStubEncoder(
             dim=config.embedding_dim
         )
-        if encoder_kind:
-            self.encoder_kind = encoder_kind
-        elif isinstance(self.encoder, HashingStubEncoder):
-            self.encoder_kind = "stub"
-        else:
-            # unknown/custom encoder instances are shipped to executors in
-            # the UDF closure ("custom"); only the known model class maps
-            # to the worker-rebuilt "real" path
-            from inception_spark.operators.encoding import (
-                SentenceTransformerEncoder,
-            )
-
-            self.encoder_kind = (
-                "real"
-                if isinstance(self.encoder, SentenceTransformerEncoder)
-                else "custom"
-            )
         self.metrics = EngineMetrics()
 
     def _embed_udf(self, prefix: str):
-        return make_embed_udf(
-            self.config,
-            encoder_kind=self.encoder_kind,
-            prefix=prefix,
-            encoder=self.encoder if self.encoder_kind == "custom" else None,
-        )
+        return make_embed_udf(self.config, prefix=prefix, encoder=self.encoder)
 
     # -- V1 strict/quarantine validation ------------------------------------
     def _validation_error(self, text_col) -> F.Column:
@@ -593,9 +570,4 @@ def register_sql_functions(
     from inception_spark.operators.chunking import make_chunk_udf
 
     spark.udf.register("chunk_text", make_chunk_udf(config))
-    spark.udf.register(
-        "embed_text_vec",
-        make_embed_udf(
-            config, encoder_kind="stub", prefix=config.lead_document
-        ),
-    )
+    spark.udf.register("embed_text_vec", make_embed_udf(config))

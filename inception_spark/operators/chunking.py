@@ -22,9 +22,9 @@ reference tests/test_embedding_service.py:269-476):
 
 Scale design (SURVEY.md §4 risks a/b): the UDF emits *chunk arrays*;
 ``posexplode`` happens JVM-side so one 10M-char document fans out to
-thousands of rows **before** the (expensive) embedding stage, letting an
-optional repartition rebalance embedding work across executors.  Arrow batch
-size is capped by config to bound memory with 10MB strings.
+thousands of rows **before** the (expensive) embedding stage.  Arrow batch
+size is capped by the session (``maxRecordsPerBatch``) to bound memory with
+10MB strings.
 """
 
 from __future__ import annotations
@@ -105,23 +105,6 @@ def split_text_into_chunks(
     return chunks
 
 
-class _CountCachedTokenizer:
-    """RegexTokenizer with an LRU cache on ``count`` — boilerplate
-    sentences (headers, disclaimers, repeated paragraphs) recur heavily
-    in real corpora, and the chunker counts each sentence at least once
-    plus once per overlap join; caching turns the repeats into dict hits.
-    ``truncate`` stays uncached (rare path, returns big strings)."""
-
-    def __init__(self, maxsize: int = 4096):
-        from functools import lru_cache
-
-        self._tok = RegexTokenizer()
-        self.count = lru_cache(maxsize=maxsize)(self._tok.count)
-
-    def truncate(self, text: str, max_tokens: int) -> str:
-        return self._tok.truncate(text, max_tokens)
-
-
 def make_chunk_udf(config: EngineConfig = DEFAULT_CONFIG):
     """Arrow-vectorized ``text → array<string>`` chunker UDF.
 
@@ -135,7 +118,7 @@ def make_chunk_udf(config: EngineConfig = DEFAULT_CONFIG):
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def chunk_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        tok = _CountCachedTokenizer()  # per-worker singleton (O4)
+        tok = RegexTokenizer()  # per-worker singleton (O4)
         for s in batches:
             yield s.map(
                 lambda t: split_text_into_chunks(
@@ -173,8 +156,7 @@ def chunk_documents(
     ``passthrough_cols`` ride along unchanged (e.g. event_time on the
     streaming path) so batch and streaming share ONE chunk-row contract.
     """
-    tok = RegexTokenizer()
-    lead_len = tok.count(config.lead_document)
+    lead_len = RegexTokenizer().count(config.lead_document)
     chunked = df.select(
         F.col(id_col).alias("doc_id"),
         *passthrough_cols,
@@ -182,7 +164,7 @@ def chunk_documents(
             "pos", "chunk"
         ),
     )
-    out = chunked.select(
+    return chunked.select(
         "doc_id",
         *passthrough_cols,
         (F.col("pos") + 1).cast("int").alias("chunk_number"),
@@ -191,46 +173,3 @@ def chunk_documents(
         .cast("int")
         .alias("n_tokens"),
     )
-    if config.chunk_partitions > 0:
-        # rebalance skew from huge documents before the embed stage (§4a)
-        out = out.repartition(config.chunk_partitions)
-    return out
-
-
-def make_chunk_udtf(config: EngineConfig = DEFAULT_CONFIG):
-    """The chunker as a Spark 4 Python UDTF — SURVEY.md §2.5 observes the
-    reference 'is, in Spark terms, one UDTF (chunker) + one scalar UDF
-    (encoder)'; this makes that literal.  Register and use laterally:
-
-        spark.udtf.register("chunk_table", make_chunk_udtf())
-        spark.sql("SELECT d.id, c.* FROM docs d, "
-                  "LATERAL chunk_table(d.text) c")
-
-    yields (chunk_number, chunk, n_tokens) rows per document.  The
-    arrow-optimized pandas-UDF path (make_chunk_udf + posexplode) remains
-    the high-throughput default; the UDTF form is the SQL-ergonomic one.
-    """
-    from pyspark.sql.functions import udtf
-
-    max_tokens = config.max_tokens
-    n_overlap = config.num_overlap_sentences
-    lead = config.lead_document
-
-    @udtf(returnType="chunk_number int, chunk string, n_tokens int")
-    class ChunkUDTF:
-        def __init__(self):
-            self._tok = RegexTokenizer()
-            self._lead_len = self._tok.count(lead)
-
-        def eval(self, text: str):
-            chunks = split_text_into_chunks(
-                text if isinstance(text, str) else "",
-                tokenizer=self._tok,
-                max_tokens=max_tokens,
-                num_overlap_sentences=n_overlap,
-                lead_text=lead,
-            )
-            for i, chunk in enumerate(chunks):
-                yield i + 1, chunk, self._tok.count(chunk) + self._lead_len
-
-    return ChunkUDTF

@@ -2,21 +2,24 @@
 
 Maps the reference's model-inference layer (C5/C6/C8/C9,
 ``/root/reference/inception/embedding_service.py:152-263``) onto an
-iterator-of-series pandas UDF with an **executor-cached encoder singleton**
-— the Spark analogue of the reference's per-process preloaded model
-(main.py:44-75, O9) — and Arrow batches giving the same cross-document
-batch amalgamation the reference gets by flattening all chunks into one
-``model.encode`` call (O1, embedding_service.py:179-213).
+iterator-of-series pandas UDF that ships its encoder in the UDF closure,
+and Arrow batches giving the same cross-document batch amalgamation the
+reference gets by flattening all chunks into one ``model.encode`` call
+(O1, embedding_service.py:179-213).
 
 Two encoder implementations behind one interface (SURVEY.md §7.1):
 
-* :class:`HashingStubEncoder` — deterministic, dependency-free: md5-seeded
-  Gaussian vectors, L2-normalized.  Exact-reproducible across runs and
-  machines, so pipeline tests can assert values, not just shapes.
+* :class:`HashingStubEncoder` — the default.  Deterministic,
+  dependency-free: md5-seeded Gaussian vectors, L2-normalized.
+  Exact-reproducible across runs and machines, so pipeline tests can
+  assert values, not just shapes.
 * :class:`SentenceTransformerEncoder` — the real model
   (``freelawproject/modernbert-embed-base_finetune_512``, reference
-  config.py:6-9), import-gated: used automatically when
-  ``sentence_transformers`` + torch are installed.
+  config.py:6-9), import-gated; select it with
+  ``EmbeddingEngine(spark, encoder=SentenceTransformerEncoder())``.  It
+  pickles as its ``(dim, force_cpu)`` recipe, so the model never travels:
+  each Python worker loads it once and caches it — the Spark analogue of
+  the reference's per-process preloaded model (main.py:44-75, O9).
 
 The retrieval prefixes are applied *inside* the encoder
 (``search_document: `` / ``search_query: ``, reference
@@ -96,6 +99,12 @@ class SentenceTransformerEncoder:
         self._torch = torch
         self._model = SentenceTransformer(self.MODEL, device=device)
         self.dim = dim
+        self.force_cpu = force_cpu
+
+    def __reduce__(self):
+        # ship the recipe, not the model: unpickling loads (or reuses) the
+        # worker process's own copy
+        return (_cached_sentence_transformer, (self.dim, self.force_cpu))
 
     def encode(self, texts: list[str], batch_size: int = 8) -> np.ndarray:
         try:
@@ -105,21 +114,12 @@ class SentenceTransformerEncoder:
                 self._torch.cuda.empty_cache()
 
 
-def default_encoder(config: EngineConfig = DEFAULT_CONFIG) -> Encoder:
-    try:
-        return SentenceTransformerEncoder(
-            dim=config.embedding_dim, force_cpu=config.force_cpu
-        )
-    except ImportError:
-        return HashingStubEncoder(dim=config.embedding_dim)
-
-
 # ---------------------------------------------------------------------------
 # the distributed encode operator
 # ---------------------------------------------------------------------------
 
-#: module-level executor cache: one encoder per Python worker process,
-#: lazily built on first batch (model preload analogue, O9).
+#: per-process model cache: one real encoder per Python worker process,
+#: built when the first UDF closure is unpickled (model preload analogue, O9).
 _ENCODER_CACHE: dict[tuple, Encoder] = {}
 
 
@@ -141,92 +141,44 @@ def _load_with_retry(factory, *, retries: int = 3, delay: float = 5.0):
     ) from last
 
 
-def _worker_encoder(kind: str, dim: int, force_cpu: bool) -> Encoder:
-    key = (kind, dim, force_cpu)
+def _cached_sentence_transformer(
+    dim: int, force_cpu: bool
+) -> SentenceTransformerEncoder:
+    key = (dim, force_cpu)
     enc = _ENCODER_CACHE.get(key)
     if enc is None:
-        if kind == "stub":
-            enc = HashingStubEncoder(dim=dim)
-        else:
-            enc = _load_with_retry(
-                lambda: SentenceTransformerEncoder(
-                    dim=dim, force_cpu=force_cpu
-                )
-            )
-        _ENCODER_CACHE[key] = enc
+        enc = _ENCODER_CACHE[key] = _load_with_retry(
+            lambda: SentenceTransformerEncoder(dim=dim, force_cpu=force_cpu)
+        )
     return enc
 
 
 def make_embed_udf(
     config: EngineConfig = DEFAULT_CONFIG,
     *,
-    encoder_kind: str = "stub",
     prefix: str | None = None,
     encoder: Encoder | None = None,
 ):
     """``chunk:string → embedding:array<float>`` iterator pandas UDF.
 
     The prefix (document or query lead) is applied here, immediately before
-    encoding, mirroring reference embedding_service.py:90 — and the encoder
-    singleton persists across batches within a worker.
+    encoding, mirroring reference embedding_service.py:90.
 
-    ``encoder``: an explicit (picklable) encoder instance shipped in the
-    UDF closure — the path for user-supplied encoders, which executors
-    could not otherwise reconstruct from a kind string.  Without it the
-    worker builds/caches its own encoder from ``encoder_kind``.
+    ``encoder`` (default: ``HashingStubEncoder(config.embedding_dim)``) is
+    shipped to the executors in the UDF closure, so it must be picklable;
+    :class:`SentenceTransformerEncoder` pickles as a load recipe.
     """
-    dim, fcpu, bsz = config.embedding_dim, config.force_cpu, config.processing_batch_size
+    enc = encoder if encoder is not None else HashingStubEncoder(
+        config.embedding_dim
+    )
+    bsz = config.processing_batch_size
     lead = config.lead_document if prefix is None else prefix
 
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def embed_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        enc = encoder if encoder is not None else _worker_encoder(
-            encoder_kind, dim, fcpu
-        )
         for s in batches:
             texts = [lead + (t if isinstance(t, str) else "") for t in s]
             vecs = enc.encode(texts, batch_size=bsz)
             yield pd.Series([v.tolist() for v in vecs])
 
     return embed_udf
-
-
-def make_embed_udf_ml(
-    config: EngineConfig = DEFAULT_CONFIG,
-    *,
-    encoder_kind: str = "stub",
-    prefix: str | None = None,
-):
-    """Alternative encode operator via ``pyspark.ml.functions
-    .predict_batch_udf`` (SURVEY.md §2.3 C5's suggested mapping).
-
-    predict_batch_udf handles Arrow batching + model caching itself
-    (make_predict_fn runs once per worker), and its ``batch_size``
-    mirrors the reference's processing micro-batch (O2).  Functionally
-    identical to :func:`make_embed_udf`; kept as the MLlib-idiomatic
-    integration point for `spark.ml` pipelines."""
-    import numpy as np
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql import types as T
-
-    dim, fcpu, bsz = (
-        config.embedding_dim,
-        config.force_cpu,
-        config.processing_batch_size,
-    )
-    lead = config.lead_document if prefix is None else prefix
-
-    def make_predict_fn():
-        enc = _worker_encoder(encoder_kind, dim, fcpu)
-
-        def predict(texts: np.ndarray) -> np.ndarray:
-            batch = [lead + (t if isinstance(t, str) else "") for t in texts]
-            return enc.encode(batch, batch_size=bsz)
-
-        return predict
-
-    return predict_batch_udf(
-        make_predict_fn,
-        return_type=T.ArrayType(T.FloatType()),
-        batch_size=bsz,
-    )

@@ -21,7 +21,8 @@ Design for 100 TB of media:
   column pruning: a filter on ``media_meta.modality`` never reads blobs);
 * decode / feature-extract run in ``mapInPandas`` — per-partition Arrow
   batches, so one Python worker init per partition and bounded memory via
-  ``arrow_max_records`` (payloads are MBs — keep batches small);
+  the session's ``maxRecordsPerBatch`` (payloads are MBs — keep batches
+  small);
 * frame sampling / resizing emit *rows per frame* (posexplode-style) so the
   downstream embedding stage rebalances with a repartition, the same skew
   strategy as the text chunker (SURVEY.md §4a).

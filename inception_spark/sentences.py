@@ -13,8 +13,8 @@ tests/test_embedding_service.py:269-327):
 * never split after common abbreviations (Mr., Dr., U.S., No., e.g., ...);
 * never split inside decimal numbers (3.14) or single-letter initials (J. D.).
 
-When NLTK *is* installed, :func:`nltk_sentences` can be swapped in for exact
-punkt parity (import-gated, with the reference's re-download retry).
+For exact punkt parity, pass ``nltk.tokenize.sent_tokenize`` (or any
+``str -> list[str]`` callable) as ``split_text_into_chunks(sentence_splitter=...)``.
 """
 
 from __future__ import annotations
@@ -81,31 +81,6 @@ def split_sentences(text: str) -> list[str]:
     if tail:
         sentences.append(tail)
     return sentences
-
-
-def nltk_sentences(text: str) -> list[str]:
-    """Exact-parity path when NLTK is installed: punkt with the reference's
-    re-download-and-retry behavior (embedding_service.py:64-78)."""
-    import zipfile
-
-    import nltk
-    from nltk.tokenize import sent_tokenize
-
-    try:
-        return sent_tokenize(text)
-    except (zipfile.BadZipFile, LookupError):
-        nltk.download("punkt", quiet=True, force=True)
-        nltk.download("punkt_tab", quiet=True, force=True)
-        return sent_tokenize(text)
-
-
-def default_sentence_splitter():
-    try:
-        import nltk  # noqa: F401  — import-gated
-
-        return nltk_sentences
-    except ImportError:
-        return split_sentences
 
 
 # --- DuckDB twin -----------------------------------------------------------

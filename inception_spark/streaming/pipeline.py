@@ -68,10 +68,7 @@ def embed_document_stream(
     chunks = chunk_documents(
         stream, config, passthrough_cols=("event_time",)
     )
-    embed_udf = make_embed_udf(
-        config, encoder_kind="stub", prefix=config.lead_document
-    )
-    return chunks.withColumn("embedding", embed_udf(F.col("chunk")))
+    return chunks.withColumn("embedding", make_embed_udf(config)(F.col("chunk")))
 
 
 def windowed_event_counts(

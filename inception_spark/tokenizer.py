@@ -17,8 +17,9 @@ Token rule (one regex, greedy, leftmost — identical semantics in Python
 * or a single digit               (digits-are-single-tokens, GPT-style),
 * or a single non-alphanumeric, non-whitespace character.
 
-Whitespace never produces tokens.  A real HF tokenizer can be swapped in via
-:class:`HFTokenizer` when ``transformers`` is installed (import-gated).
+Whitespace never produces tokens.  Any object with the :class:`Tokenizer`
+interface (e.g. a thin wrapper over a HuggingFace tokenizer) can be passed to
+``split_text_into_chunks(tokenizer=...)`` instead.
 """
 
 from __future__ import annotations
@@ -59,11 +60,8 @@ class RegexTokenizer:
     reference tests/test_embedding_service.py:309-315).
     """
 
-    def spans(self, text: str) -> list[tuple[int, int]]:
-        return [m.span() for m in _TOKEN_RE.finditer(text)]
-
     def count(self, text: str) -> int:
-        return sum(1 for _ in _TOKEN_RE.finditer(text))
+        return len(_TOKEN_RE.findall(text))
 
     def truncate(self, text: str, max_tokens: int) -> str:
         if max_tokens <= 0:
@@ -72,24 +70,3 @@ class RegexTokenizer:
             if i == max_tokens - 1:
                 return text[: m.end()]
         return text
-
-
-class HFTokenizer:
-    """HuggingFace-backed drop-in (used only when transformers is
-    installed; parity with reference main.py:53-55)."""
-
-    def __init__(self, model_name: str):
-        from transformers import AutoTokenizer  # import-gated
-
-        self._tok = AutoTokenizer.from_pretrained(model_name)
-
-    def count(self, text: str) -> int:
-        return len(self._tok.encode(text, add_special_tokens=False))
-
-    def truncate(self, text: str, max_tokens: int) -> str:
-        ids = self._tok.encode(text, add_special_tokens=False)
-        return self._tok.decode(ids[:max_tokens])
-
-
-def default_tokenizer() -> Tokenizer:
-    return RegexTokenizer()

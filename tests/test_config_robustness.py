@@ -1,9 +1,8 @@
 """Results must be invariant to execution-config toggles: AQE on/off,
 Arrow on/off, shuffle-partition counts — the properties the oracle hash
-gate depends on."""
+gate depends on — and every engine config knob must be a live one."""
 
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 
@@ -36,15 +35,39 @@ def test_results_invariant_to_exec_config(spark, name):
             spark.conf.set(k, v)
 
 
-def test_ml_embed_udf_matches_pandas_udf(spark):
-    from inception_spark.operators.encoding import (
-        make_embed_udf,
-        make_embed_udf_ml,
-    )
+def test_every_engine_config_field_is_read():
+    """A config knob nothing reads is a dead setting users can't tell
+    apart from a live one.  Every EngineConfig field must be read as an
+    attribute by package code outside config.py — directly, or through
+    an EngineConfig property that is."""
+    import ast
+    import dataclasses
+    import inspect
+    import pathlib
 
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon")], "id long, chunk string"
-    )
-    a = df.withColumn("e", make_embed_udf()(F.col("chunk"))).collect()
-    b = df.withColumn("e", make_embed_udf_ml()(F.col("chunk"))).collect()
-    assert {r["id"]: r["e"] for r in a} == {r["id"]: r["e"] for r in b}
+    import inception_spark
+    from inception_spark.config import EngineConfig
+
+    pkg = pathlib.Path(inception_spark.__file__).parent
+    read = {
+        node.attr
+        for path in pkg.rglob("*.py")
+        if path.name != "config.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load)
+    }
+    props = {
+        name: inspect.getsource(p.fget)
+        for name, p in vars(EngineConfig).items()
+        if isinstance(p, property)
+    }
+    unread = [
+        f.name
+        for f in dataclasses.fields(EngineConfig)
+        if f.name not in read
+        and not any(
+            f"self.{f.name}" in src and name in read
+            for name, src in props.items()
+        )
+    ]
+    assert unread == []

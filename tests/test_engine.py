@@ -133,7 +133,6 @@ def test_custom_encoder_reaches_executors(spark):
     eng = EmbeddingEngine(
         spark, EngineConfig(embedding_dim=8), encoder=ConstantEncoder()
     )
-    assert eng.encoder_kind == "custom"
     df = spark.createDataFrame([(1, "Some text here.")], "id long, text string")
     row = eng.embed_documents(df).collect()[0]
     assert row["embedding"] == [0.5] * 8          # executor used OUR encoder

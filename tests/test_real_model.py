@@ -1,41 +1,22 @@
-"""Real-model path tier (C8/C9/M6) + stub equivalence of the two encode
-operators.
+"""Real-model path tier (C8/C9/M6) and the real encoder's executor
+recipe.
 
-The torch/sentence_transformers tests SKIP in this environment (no ML
-libs installable — PARITY.md); they exist so the parity claims become
-executable the moment the real stack is present.  Everything else runs.
+The torch/sentence_transformers tests SKIP when those libraries are not
+installed (PARITY.md); they exist so the parity claims become executable
+the moment the real stack is present.  Everything else runs.
 """
 
-import pytest
-from pyspark.sql import functions as F
+import pickle
+import threading
 
-from inception_spark.config import DEFAULT_CONFIG
+import pytest
+
 from inception_spark.operators import encoding as E
 
 
 # ---------------------------------------------------------------------------
 # runnable everywhere
 # ---------------------------------------------------------------------------
-
-
-def test_embed_udf_equals_predict_batch_udf(spark):
-    """make_embed_udf ≡ make_embed_udf_ml on the stub encoder: same
-    prefix handling, same vectors, element for element."""
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .limit(50)
-        .select("doc_id", F.col("text").alias("chunk"))
-    )
-    a_udf = E.make_embed_udf(DEFAULT_CONFIG, encoder_kind="stub")
-    b_udf = E.make_embed_udf_ml(DEFAULT_CONFIG, encoder_kind="stub")
-    out = docs.select(
-        "doc_id",
-        a_udf(F.col("chunk")).alias("a"),
-        b_udf(F.col("chunk")).alias("b"),
-    ).collect()
-    assert len(out) == 50
-    for r in out:
-        assert r["a"] == r["b"], f"doc {r['doc_id']} vectors differ"
 
 
 def test_load_with_retry_recovers_and_gives_up(monkeypatch):
@@ -63,16 +44,37 @@ def test_load_with_retry_recovers_and_gives_up(monkeypatch):
         E._load_with_retry(always_fails)
 
 
-def test_default_encoder_falls_back_to_stub():
-    enc = E.default_encoder()
-    # in this env there is no sentence_transformers → stub; with the real
-    # stack installed this becomes the SentenceTransformerEncoder branch
-    try:
-        import sentence_transformers  # noqa: F401
+def test_real_encoder_pickles_as_recipe_and_loads_once(monkeypatch):
+    """The real encoder reaches executors as ``(dim, force_cpu)`` only;
+    each process loads the model once, through the retry loop (O9/M6)."""
+    built, loads = [], []
 
-        assert isinstance(enc, E.SentenceTransformerEncoder)
-    except ImportError:
-        assert isinstance(enc, E.HashingStubEncoder)
+    def fake_init(self, dim=768, force_cpu=False):
+        built.append((dim, force_cpu))
+        self.dim, self.force_cpu = dim, force_cpu
+        # unpicklable stand-in for the weights: dumps() below only
+        # succeeds if the model is left out of the pickle
+        self._model = threading.Lock()
+
+    real_load = E._load_with_retry
+
+    def spy_load(factory, **kw):
+        loads.append(1)
+        return real_load(factory, **kw)
+
+    monkeypatch.setattr(E.SentenceTransformerEncoder, "__init__", fake_init)
+    monkeypatch.setattr(E, "_load_with_retry", spy_load)
+    monkeypatch.setattr(E, "_ENCODER_CACHE", {})
+
+    enc = E.SentenceTransformerEncoder(dim=16, force_cpu=True)
+    assert enc.__reduce__() == (E._cached_sentence_transformer, (16, True))
+    blob = pickle.dumps(enc)
+
+    a, b = pickle.loads(blob), pickle.loads(blob)
+    assert a is b and isinstance(a, E.SentenceTransformerEncoder)
+    assert (a.dim, a.force_cpu) == (16, True)
+    assert built == [(16, True), (16, True)]  # driver's + one per process
+    assert loads == [1]
 
 
 def test_health_reports_gpu_absent_without_torch(spark):
