@@ -2877,8 +2877,8 @@ def _q_avro_ingest_stats(spark, sf_dir):
 
 
 def _q_avro_snappy_stats(spark, sf_dir):
-    """Same walk under the snappy block codec (pure-Python snappy +
-    the spec's big-endian CRC32-of-uncompressed trailer).  Shares the
+    """Same walk under the snappy block codec (pyarrow's bundled snappy
+    + the spec's big-endian CRC32-of-uncompressed trailer).  Shares the
     closed-form oracle (counters are codec-independent)."""
     from inception_spark.sources.avrocontainer import avro_ingest_stats
 
@@ -3025,7 +3025,7 @@ def _q_arrow_ipc_stats(spark, sf_dir):
     interchange layer Spark has no DataSource for: per-shard stream
     blobs decode worker-side with pyarrow.ipc (zero-copy, one record
     batch at a time) and aggregate with VECTORIZED pyarrow compute
-    kernels — unlike the pure-Python codec family this is a native-
+    kernels — unlike the per-record container walks this is a native-
     speed bulk path.  The oracle reads the same stats off documents."""
     from inception_spark.sources.arrowipc import arrow_ipc_stats
 
@@ -3587,11 +3587,10 @@ def _q_streaming_sqlite_ingest(spark, sf_dir):
 
 def _q_lz4_shard_stats(spark, sf_dir):
     """The codec-oracle protocol applied to a COMPRESSION format:
-    every document's text is LZ4-framed worker-side (both block-
-    checksum paths), decoded back through the pure-Python codec pinned
-    bidirectionally against liblz4.so.1 (block + frame + xxh32,
-    tests/test_lz4_crossdecode.py), and folded to per-shard counters
-    whose oracle reads the SAME stats straight off documents.text —
+    every document's text is LZ4-framed worker-side, decoded back
+    through pyarrow's bundled LZ4 frame codec, and folded to per-shard
+    counters whose oracle reads the SAME stats straight off
+    documents.text —
     including a decoded-content-sensitive letter count a wrong decode
     cannot reproduce."""
     from inception_spark.sources.lz4shard import lz4_shard_stats
@@ -3621,12 +3620,10 @@ def _q_streaming_lz4_shard(spark, sf_dir):
 
 def _q_zstd_shard_stats(spark, sf_dir):
     """The codec-oracle protocol applied to the data-lake default
-    codec: every document's text is zstd-compressed worker-side with
-    the REAL libzstd at levels 1/19 (full Huffman/FSE entropy path;
-    store-mode frames where the lib is absent), decoded back through
-    the pure-Python RFC 8878 transcription — cross-validated against
-    libzstd cell-for-cell in tests/test_zstd_crossdecode.py — and
-    folded to per-shard counters whose oracle reads the SAME stats
+    codec: every document's text is zstd-compressed worker-side at
+    levels 1/19 (full Huffman/FSE entropy path), decoded back through
+    pyarrow's bundled zstd, and folded to per-shard counters whose
+    oracle reads the SAME stats
     (including a decoded-content-sensitive letter count) straight off
     documents.text."""
     from inception_spark.sources.zstdshard import zstd_shard_stats
@@ -3655,14 +3652,12 @@ def _q_streaming_zstd_shard(spark, sf_dir):
 
 
 def _q_codec_matrix_stats(spark, sf_dir):
-    """All five binding-free decode paths (Brotli, stdlib gzip, LZ4
-    frame, Snappy block, zstd frame — each cross-validated against its
-    reference implementation in tests/) proven on the same corpus in
-    ONE mapInPandas scan; the oracle cross-joins one closed-form
-    aggregate over documents.text with the codec list, so a defect in
-    any single decoder flips exactly its own row.  Brotli and zstd
-    compress with the REAL system libs worker-side, so those decodes
-    walk real entropy tables and dictionary transforms."""
+    """All five decode paths (Brotli, stdlib gzip, LZ4 frame, Snappy
+    block, zstd frame — all but gzip through pyarrow's bundled C
+    codecs) proven on the same corpus in ONE mapInPandas scan; the
+    oracle cross-joins one closed-form aggregate over documents.text
+    with the codec list, so a defect in any single decoder flips
+    exactly its own row."""
     from inception_spark.sources.codecmatrix import codec_matrix_stats
 
     _ensure_workers_can_import(spark)
@@ -3681,7 +3676,7 @@ def _q_codec_matrix_sample(spark, sf_dir):
     steady-state bench artifact prices two decode paths (~round-robin
     coverage across rounds) instead of re-proving all five every run —
     the full matrix remains oracle-checked via the codec_matrix_stats
-    entry and the per-codec differential suites in tests/."""
+    entry and tests/test_compression.py."""
     from inception_spark.sources.codecmatrix import (
         codec_matrix_stats,
         codec_pair_for_round,
@@ -3736,7 +3731,7 @@ def _q_warc_http_stats(spark, sf_dir):
     (content-encoding rotates identity/gzip/br/zstd by doc_id, even
     ids additionally chunk the transfer), and the decode runs the full
     stack — WARC grammar, HTTP headers, chunked de-transfer, content
-    decode through the cross-validated brotli/zstd codecs.  The oracle
+    decode through pyarrow's bundled brotli/zstd codecs.  The oracle
     reads the same per-encoding stats straight off documents.text."""
     from inception_spark.sources.warc import warc_http_stats
 
@@ -3768,8 +3763,9 @@ def _q_zstd_dict_stats(spark, sf_dir):
     proven driver-visibly: a REAL ZDICT dictionary trains on a
     deterministic 200-doc sample (control-plane-sized collect),
     workers dict-compress every document's text with libzstd and
-    decode it back through ZstdDict — dictionary entropy seeding,
-    RepOffsets, and dict-window matches all load-bearing.  Stats
+    decode it back through libzstd's dictionary decoder — dictionary
+    entropy seeding, RepOffsets, and dict-window matches all
+    load-bearing.  Stats
     mirror zstd_shard_stats, so the oracle is the same closed form."""
     from inception_spark.sources.zstdshard import zstd_dict_stats
 
@@ -8007,7 +8003,7 @@ ORDER BY 1
 """
 
 #: codec_matrix_stats + its live twin: ONE closed-form aggregate over
-#: documents.text cross-joined with the codec list — each of the four
+#: documents.text cross-joined with the codec list — each of the five
 #: decode paths must reproduce the identical content stats
 _CODEC_MATRIX_ORACLE = """
 WITH agg AS (

@@ -307,9 +307,8 @@ HEADLINE = [
     # r11 final: G.711 decode round-trip (RIFF walk + integer expanders)
     "g711_audio_stats",
     # r11 coda: LZ4 and zstd frame decode round-trips over every
-    # document's text (pure-Python codecs — the measured cost of
-    # binding-free ingest; zstd compresses with the real libzstd, so
-    # the decode path walks real Huffman/FSE entropy tables)
+    # document's text (pyarrow's bundled C codecs; zstd compresses at
+    # real levels, so the decode path walks real Huffman/FSE tables)
     "lz4_shard_stats",
     "zstd_shard_stats",
     # r12: one scan, TWO decoders — deterministic per-round rotation

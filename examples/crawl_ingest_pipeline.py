@@ -7,8 +7,8 @@ exercising every layer added for it:
    transfer on half) wrapped in a WARC response record; segments are
    written both gzipped (the Common Crawl classic) and zstd with a
    SHARED DICTIONARY in the leading skippable frame (the IIPC
-   warc-zstd variant) — both decode through the binding-free
-   cross-validated codecs;
+   warc-zstd variant) — zstd decodes through pyarrow's bundled codec,
+   the dictionary form through libzstd;
 2. ``read_warc``: one task per segment, records stream out in bounded
    Arrow batches, no scan shuffle;
 3. ``decode_http_responses``: status/headers, chunked de-transfer,
@@ -27,6 +27,8 @@ import os
 import struct
 import sys
 import tempfile
+
+import pyarrow as pa
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,13 +50,13 @@ def _http_message(text: bytes, enc: str, chunked: bool) -> bytes:
     if enc == "gzip":
         body = gzip.compress(text)
     elif enc == "br":
-        from inception_spark.sources.codecmatrix import _brotli_compress
-
-        body = _brotli_compress(text)
+        body = pa.Codec("brotli", compression_level=5).compress(
+            text, asbytes=True
+        )
     elif enc == "zstd":
-        from inception_spark.sources.zstdshard import _compress
-
-        body = _compress(text, 3)
+        body = pa.Codec("zstd", compression_level=3).compress(
+            text, asbytes=True
+        )
     else:
         body = text
     head = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"

@@ -8,7 +8,7 @@ UDF boundary.  That boundary is exactly where this reader lives: shard
 blobs decode worker-side with ``pyarrow.ipc`` (zero-copy over the blob
 buffer), and per-batch aggregation happens VECTORIZED with pyarrow
 compute before anything reaches Python scalars — unlike the
-pure-Python codec family, this path runs at native speed and is a
+per-record container walks, this path runs at native speed and is a
 legitimate BULK route at scale, not just a portability one.
 
 Spark shape: the shard-source discipline (synthesis per shard key via

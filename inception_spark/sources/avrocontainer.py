@@ -1,11 +1,10 @@
-"""Avro Object Container File ingest — binding-free, spec-transcribed.
+"""Avro Object Container File ingest — spec-transcribed.
 
 Avro ``.avro`` files are THE row-major interchange format of Hadoop-era
 training-data drops (event logs, Common Crawl derivatives, Kafka dumps).
 This Spark build ships the avro *core* jars but not the ``spark-avro``
-DataSource module, so ``spark.read.format("avro")`` is unavailable —
-the same gap the lz4/zstd/brotli family fills for compression formats,
-filled here for a CONTAINER format: a pure-Python reader/writer for the
+DataSource module, so ``spark.read.format("avro")`` is unavailable;
+this fills that gap with a pure-Python reader/writer for the
 Object Container File layout (Avro 1.12 spec, "Object Container Files"
 chapter; public documentation, no code consulted).
 
@@ -30,9 +29,7 @@ Arrow batch pass and folds mergeable per-shard counters, and the only
 shuffle is the shard groupBy.  At 100 TB: one container per task,
 per-task memory = one block's decompressed payload (blocks decode one
 at a time) — size blocks like parquet row groups.  The deflate path
-uses stdlib zlib (C speed); snappy routes through the pure-Python
-codec (`operators/snappycodec`, cross-pinned vs libsnappy), priced in
-SCALING.md's codec-routing rule.
+uses stdlib zlib and snappy uses pyarrow's bundled codec, both in C.
 """
 
 from __future__ import annotations
@@ -43,10 +40,13 @@ import zlib
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from inception_spark.sources.compression import CodecError, decompress
 
 MAGIC = b"Obj\x01"
 _SYNC = bytes(range(16))  # deterministic sync marker for synthesis
@@ -109,11 +109,8 @@ def _encode_codec(payload: bytes, codec: str) -> bytes:
         c = zlib.compressobj(6, zlib.DEFLATED, -15)
         return c.compress(payload) + c.flush()
     if codec == "snappy":
-        from inception_spark.operators.snappycodec import encode_snappy
-
-        return encode_snappy(payload) + struct.pack(
-            ">I", zlib.crc32(payload) & 0xFFFFFFFF
-        )
+        crc = struct.pack(">I", zlib.crc32(payload) & 0xFFFFFFFF)
+        return pa.Codec("snappy").compress(payload, asbytes=True) + crc
     raise ValueError(f"unknown avro codec {codec!r}")
 
 
@@ -126,16 +123,11 @@ def _decode_codec(payload: bytes, codec: str) -> bytes:
         except zlib.error as exc:
             raise AvroFormatError(f"bad deflate block: {exc}") from exc
     if codec == "snappy":
-        from inception_spark.operators.snappycodec import (
-            SnappyFormatError,
-            decode_snappy,
-        )
-
         if len(payload) < 4:
             raise AvroFormatError("snappy block too short for CRC")
         try:
-            raw = decode_snappy(payload[:-4])
-        except SnappyFormatError as exc:
+            raw = decompress(payload[:-4], "snappy")
+        except CodecError as exc:
             raise AvroFormatError(f"bad snappy block: {exc}") from exc
         (want,) = struct.unpack(">I", payload[-4:])
         if zlib.crc32(raw) & 0xFFFFFFFF != want:

@@ -1,7 +1,6 @@
-"""Codec-matrix ingest check — ONE corpus scan drives all five
-binding-free decode paths (Brotli, gzip via stdlib zlib, LZ4 frame,
-Snappy block, zstd frame) over every document and folds per-codec
-counters.
+"""Codec-matrix ingest check — ONE corpus scan drives all five decode
+paths (Brotli, gzip via stdlib zlib, LZ4 frame, Snappy block, zstd
+frame) over every document and folds per-codec counters.
 
 Why one entry instead of five: at 100 TB a per-codec validation pass
 is five corpus scans; the matrix shape proves each decoder on the
@@ -10,12 +9,9 @@ reduce per Arrow batch, nothing materialized), and its oracle is one
 aggregate cross-joined to the codec list — any single codec's defect
 flips exactly its own row.
 
-zstd and brotli compress with the REAL system libraries
-(executor-cached ctypes handles — the decodes then walk real entropy
-tables and dictionary/transform references); zstd falls back to
-store-mode frames where libzstd is absent, brotli raises honestly
-(our brotli codec is decode-only).  The other three always run both
-of our own directions.
+Every codec but gzip compresses and decodes through pyarrow's bundled
+C codecs (brotli quality 5, zstd level 3), so the decodes walk real
+entropy tables and dictionary/transform references.
 """
 
 from __future__ import annotations
@@ -24,54 +20,18 @@ import gzip as _gzip
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from inception_spark.operators.brotlicodec import decode_brotli
-from inception_spark.operators.lz4codec import (
-    decode_lz4_frame,
-    encode_lz4_frame,
-)
-from inception_spark.operators.snappycodec import (
-    decode_snappy,
-    encode_snappy,
-)
-from inception_spark.operators.zstdcodec import decode_zstd_frame
 from inception_spark.sources import fanout
-from inception_spark.sources.zstdshard import _compress as _zstd_compress
+from inception_spark.sources.compression import decompress
 
 CODECS = ("brotli", "gzip", "lz4", "snappy", "zstd")
 
-_BROTLI_ENC = None
-
-
-def _brotli_compress(raw: bytes, quality: int = 5) -> bytes:
-    """Real libbrotlienc via an executor-cached ctypes handle (our
-    brotli codec is decode-only); raises honestly where absent."""
-    global _BROTLI_ENC
-    if _BROTLI_ENC is None:
-        import ctypes
-
-        e = ctypes.CDLL("libbrotlienc.so.1")
-        e.BrotliEncoderCompress.restype = ctypes.c_int
-        e.BrotliEncoderCompress.argtypes = [
-            ctypes.c_int, ctypes.c_int, ctypes.c_int, ctypes.c_size_t,
-            ctypes.c_char_p, ctypes.POINTER(ctypes.c_size_t),
-            ctypes.c_char_p,
-        ]
-        _BROTLI_ENC = e
-    import ctypes
-
-    cap = len(raw) * 2 + 1024
-    dst = ctypes.create_string_buffer(cap)
-    osz = ctypes.c_size_t(cap)
-    if not _BROTLI_ENC.BrotliEncoderCompress(
-        quality, 22, 0, len(raw), raw, ctypes.byref(osz), dst
-    ):
-        raise RuntimeError("libbrotlienc compression failed")
-    return dst.raw[: osz.value]
+_LEVELS = {"brotli": 5, "zstd": 3}  # lz4 and snappy take no level
 
 _PARTIAL_SCHEMA = T.StructType(
     [
@@ -84,15 +44,12 @@ _PARTIAL_SCHEMA = T.StructType(
 
 
 def _roundtrip(codec: str, raw: bytes) -> bytes:
-    if codec == "brotli":
-        return decode_brotli(_brotli_compress(raw))
     if codec == "gzip":
         return _gzip.decompress(_gzip.compress(raw, compresslevel=6))
-    if codec == "lz4":
-        return decode_lz4_frame(encode_lz4_frame(raw))
-    if codec == "snappy":
-        return decode_snappy(encode_snappy(raw))
-    return decode_zstd_frame(_zstd_compress(raw, 3))
+    packed = pa.Codec(codec, compression_level=_LEVELS.get(codec)).compress(
+        raw, asbytes=True
+    )
+    return decompress(packed, codec)
 
 
 def codec_matrix_partials(
@@ -158,9 +115,9 @@ def codec_matrix_from_partials(parts: DataFrame) -> DataFrame:
 def codec_matrix_stats(
     docs: DataFrame, *, codecs: tuple = CODECS
 ) -> DataFrame:
-    """All four binding-free decode paths proven on the same corpus in
-    one scan: (codec, n_docs, decoded_bytes, n_t) — the oracle computes
-    the single aggregate off documents.text and cross-joins the codec
+    """All five decode paths proven on the same corpus in one scan:
+    (codec, n_docs, decoded_bytes, n_t) — the oracle computes the
+    single aggregate off documents.text and cross-joins the codec
     list, so rows must agree codec-for-codec."""
     return codec_matrix_from_partials(
         codec_matrix_partials(docs, codecs=codecs)

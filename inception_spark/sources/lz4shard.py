@@ -1,12 +1,10 @@
 """LZ4-framed payload ingestion — compressed binary columns decoded
-worker-side with the cross-validated pure-Python codec.
+worker-side through pyarrow's bundled LZ4 frame codec
+(:func:`inception_spark.sources.compression.decompress`).
 
 Web-scale corpora arrive lz4-framed (tar.lz4 shards, WARC sidecars,
-object-store blobs); a 1000-executor ingest cannot assume a ``lz4``
-Python binding on every worker image, so the decode path here is
-:mod:`inception_spark.operators.lz4codec` — stdlib-only, pinned
-bidirectionally against ``liblz4.so.1`` in
-``tests/test_lz4_crossdecode.py``.
+object-store blobs); pyarrow is a hard dependency, so every worker
+image already carries the C codec and no ``lz4`` binding is needed.
 
 Spark shape (the synth_bmp_corpus / g711 discipline):
 
@@ -35,11 +33,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import pyarrow as pa
+
 from inception_spark.sources import fanout
-from inception_spark.operators.lz4codec import (
-    decode_lz4_frame,
-    encode_lz4_frame,
-)
+from inception_spark.sources.compression import decompress
 
 _CORPUS_SCHEMA = T.StructType(
     [
@@ -54,19 +51,21 @@ _CORPUS_SCHEMA = T.StructType(
 def synth_lz4_corpus(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Deterministic per-document LZ4 frame: the document's UTF-8 text,
-    framed with block checksums on even doc_ids (both checksum paths
-    exercised), shard = doc_id mod 4.  Worker-side synthesis."""
+    """Deterministic per-document LZ4 frame of the document's UTF-8
+    text, shard = doc_id mod 4.  Worker-side synthesis.
+
+    ``block_checksummed`` is a doc_id-parity label (True on even
+    doc_ids) kept for the entry's stable output; the frames themselves
+    carry no block checksums."""
     src = docs.select(id_col, text_col).where(F.col(text_col).isNotNull())
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lz4 = pa.Codec("lz4")
         for pdf in batches:
             ids = pdf[id_col].astype("int64")
             payloads = [
-                encode_lz4_frame(
-                    str(t).encode("utf-8"), block_checksum=(int(i) % 2 == 0)
-                )
-                for i, t in zip(ids, pdf[text_col])
+                lz4.compress(str(t).encode("utf-8"), asbytes=True)
+                for t in pdf[text_col]
             ]
             yield pd.DataFrame(
                 {
@@ -103,7 +102,7 @@ def _decode_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for sh, bc, p in zip(
             pdf["shard"], pdf["block_checksummed"], pdf["payload"]
         ):
-            decoded = decode_lz4_frame(bytes(p))
+            decoded = decompress(bytes(p), "lz4")
             acc = rows.setdefault(int(sh), [0, 0, 0, 0])
             acc[0] += 1
             acc[1] += len(decoded)
@@ -148,9 +147,9 @@ def lz4_from_partials(parts: DataFrame) -> DataFrame:
 
 def lz4_shard_stats(docs: DataFrame) -> DataFrame:
     """REAL LZ4 frame decode, driver-visibly oracle-checked: frame
-    every document's text, decode it back worker-side through the
-    liblz4-pinned codec, and aggregate per shard: (shard, n_docs,
-    decoded_bytes, n_e, n_block_checksummed).  The oracle computes the
-    same stats directly from ``documents.text`` in SQL — a codec
-    defect hash-mismatches (or fails the decode outright)."""
+    every document's text, decode it back worker-side, and aggregate
+    per shard: (shard, n_docs, decoded_bytes, n_e, n_block_checksummed).
+    The oracle computes the same stats directly from ``documents.text``
+    in SQL — a codec defect hash-mismatches (or fails the decode
+    outright)."""
     return lz4_from_partials(lz4_partials(synth_lz4_corpus(docs)))

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from inception_spark.sources.compression import CodecError, decompress
+
 TAR_MEMBER_SCHEMA = T.StructType(
     [
         T.StructField("shard_file", T.StringType(), False),
@@ -57,10 +59,9 @@ _LZ4F_MAGIC = b"\x04\x22\x4d\x18"
 
 
 def _decompress_shard(raw: bytes, fname: str, strict: bool) -> bytes | None:
-    """Transparent ``.tar.zst`` / ``.tar.lz4`` support through the
-    binding-free codecs (operators/zstdcodec, operators/lz4codec —
-    both cross-validated against their system libraries).  gzip stays
-    on tarfile's own streaming path.  Returns None to signal
+    """Transparent ``.tar.zst`` / ``.tar.lz4`` support through pyarrow's
+    bundled C codecs (:mod:`inception_spark.sources.compression`).
+    gzip stays on tarfile's own streaming path.  Returns None to signal
     quarantine in lenient mode.
 
     Memory note: unlike gzip (streamed by ``r|*``), a zstd/lz4 shard
@@ -68,31 +69,17 @@ def _decompress_shard(raw: bytes, fname: str, strict: bool) -> bytes | None:
     compressed + decompressed shard size.  Size such shards like
     parquet row groups (the zipshard contract), not like tar streams.
     """
-    if raw[:4] == _ZSTD_MAGIC:
-        from inception_spark.operators.zstdcodec import (
-            ZstdFormatError, decode_zstd_frame,
-        )
-        try:
-            return decode_zstd_frame(raw)
-        except ZstdFormatError as exc:
-            if strict:
-                raise TarFormatError(
-                    f"corrupt zstd shard {fname}: {exc}"
-                ) from exc
-            return None
-    if raw[:4] == _LZ4F_MAGIC:
-        from inception_spark.operators.lz4codec import (
-            Lz4FormatError, decode_lz4_frame,
-        )
-        try:
-            return decode_lz4_frame(raw)
-        except Lz4FormatError as exc:
-            if strict:
-                raise TarFormatError(
-                    f"corrupt lz4 shard {fname}: {exc}"
-                ) from exc
-            return None
-    return raw
+    codec = {_ZSTD_MAGIC: "zstd", _LZ4F_MAGIC: "lz4"}.get(raw[:4])
+    if codec is None:
+        return raw
+    try:
+        return decompress(raw, codec)
+    except CodecError as exc:
+        if strict:
+            raise TarFormatError(
+                f"corrupt {codec} shard {fname}: {exc}"
+            ) from exc
+        return None
 
 
 def _verify_gzip_stream(chunks) -> None:
@@ -148,8 +135,8 @@ def read_tar_members(
     """Tar shard directory/glob → one row per member
     (``TAR_MEMBER_SCHEMA``).  Plain, gzipped (``.tar.gz``/``.tgz``),
     zstd (``.tar.zst``) and lz4 (``.tar.lz4``) shards all parse:
-    gzip via tarfile's stream reader (``r|*``), zstd/lz4 via the
-    binding-free cross-validated codecs (magic-sniffed, see
+    gzip via tarfile's stream reader (``r|*``), zstd/lz4 via
+    pyarrow's bundled codecs (magic-sniffed, see
     ``_decompress_shard`` for the memory contract).
 
     * ``extensions`` — keep only these member extensions (filtering

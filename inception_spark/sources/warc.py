@@ -41,9 +41,12 @@ from __future__ import annotations
 import zlib
 from collections.abc import Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from inception_spark.sources.compression import CodecError, decompress
 
 WARC_SCHEMA = T.StructType(
     [
@@ -239,37 +242,32 @@ def parse_warc_records(
     streaming inflater and the streaming record parser; peak memory is
     ``O(chunk + largest record)`` past the compressed input for gzip.
 
-    ``.warc.zst`` (the IIPC warc-zstd variant) decodes through the
-    binding-free cross-validated codec, INCLUDING the variant's
-    shared-dictionary form: a leading ``0x184D2A5D`` skippable frame
-    carries the zstd dictionary (itself possibly zstd-compressed, per
-    the spec), which seeds every following frame.  Frames decompress
+    ``.warc.zst`` (the IIPC warc-zstd variant) decodes through
+    pyarrow's bundled zstd, INCLUDING the variant's shared-dictionary
+    form: a leading ``0x184D2A5D`` skippable frame carries the zstd
+    dictionary (itself possibly zstd-compressed, per the spec), which
+    seeds every following frame through libzstd.  Frames decompress
     whole before parsing (record iteration stays streaming past
     that)."""
     if data[:2] == b"\x1f\x8b":
         chunks: Iterable[bytes] = _iter_inflated_chunks(data, strict=strict)
     elif data[:4] == b"\x28\xb5\x2f\xfd" or data[:4] == b"\x5d\x2a\x4d\x18":
-        from inception_spark.operators.zstdcodec import (
-            ZstdFormatError, decode_zstd_frame,
-        )
         try:
             dictionary = None
             if data[:4] == b"\x5d\x2a\x4d\x18":
                 import struct as _struct
 
                 if len(data) < 8:
-                    raise ZstdFormatError("truncated dictionary frame")
+                    raise CodecError("truncated dictionary frame")
                 (dsz,) = _struct.unpack_from("<I", data, 4)
                 if 8 + dsz > len(data):
-                    raise ZstdFormatError(
-                        "dictionary frame larger than segment"
-                    )
-                draw = data[8 : 8 + dsz]
-                if draw[:4] == b"\x28\xb5\x2f\xfd":
-                    draw = decode_zstd_frame(draw)  # spec: may be nested
-                dictionary = draw
-            chunks = (decode_zstd_frame(data, dictionary=dictionary),)
-        except ZstdFormatError as exc:
+                    raise CodecError("dictionary frame larger than segment")
+                dictionary = data[8 : 8 + dsz]
+                if dictionary[:4] == b"\x28\xb5\x2f\xfd":
+                    # spec: the dictionary may itself be zstd-compressed
+                    dictionary = decompress(dictionary, "zstd")
+            chunks = (decompress(data, "zstd", dictionary=dictionary),)
+        except CodecError as exc:
             if strict:
                 raise WarcFormatError(f"corrupt zstd segment: {exc}") from exc
             chunks = (b"",)
@@ -368,7 +366,7 @@ def build_warc_record(
 # payload (an HTTP/1.x message) and the text pipeline.  Transfer
 # decoding (chunked) and content decoding (gzip/deflate/br/zstd — the
 # real Common Crawl distribution) both handled; br and zstd route
-# through the binding-free cross-validated codecs.
+# through pyarrow's bundled codecs (sources/compression.py).
 # ---------------------------------------------------------------------------
 
 
@@ -447,14 +445,8 @@ def parse_http_response(payload: bytes, *, strict: bool = True) -> dict:
                 body = _zl.decompress(body)
             except _zl.error:  # raw-deflate servers (common misconfig)
                 body = _zl.decompress(body, -15)
-        elif enc == "br":
-            from inception_spark.operators.brotlicodec import decode_brotli
-
-            body = decode_brotli(body)
-        elif enc == "zstd":
-            from inception_spark.operators.zstdcodec import decode_zstd_frame
-
-            body = decode_zstd_frame(body)
+        elif enc in ("br", "zstd"):
+            body = decompress(body, "brotli" if enc == "br" else "zstd")
         elif enc != "identity":
             raise HttpFormatError(f"unknown content-encoding {enc!r}")
     except HttpFormatError:
@@ -553,13 +545,13 @@ def _encode_http_body(raw: bytes, enc: str) -> bytes:
 
         return _gz.compress(raw, compresslevel=6)
     if enc == "br":
-        from inception_spark.sources.codecmatrix import _brotli_compress
-
-        return _brotli_compress(raw)
+        return pa.Codec("brotli", compression_level=5).compress(
+            raw, asbytes=True
+        )
     if enc == "zstd":
-        from inception_spark.sources.zstdshard import _compress
-
-        return _compress(raw, 3)
+        return pa.Codec("zstd", compression_level=3).compress(
+            raw, asbytes=True
+        )
     return raw
 
 

@@ -1,15 +1,12 @@
-"""Zstd-framed payload ingestion — the data-lake default codec decoded
-worker-side with the RFC 8878 transcription in
-:mod:`inception_spark.operators.zstdcodec` (cross-validated against
-libzstd in ``tests/test_zstd_crossdecode.py``).
+"""Zstd-framed payload ingestion — the data-lake default codec, decoded
+worker-side through pyarrow's bundled zstd
+(:func:`inception_spark.sources.compression.decompress`).
 
-The corpus synthesis intentionally uses the REAL libzstd (via ctypes,
-loaded once per executor) when the library is present: the payloads
-then exercise the full entropy path — Huffman literals, FSE sequence
-tables, repeat offsets — not just the store-mode subset our own
-encoder emits.  Where libzstd is absent the synthesis falls back to
-:func:`encode_zstd_store` (still a valid frame; the decode path and
-the oracle are unchanged).
+The corpus synthesis compresses with pyarrow's zstd at real levels
+(1 and 19), so the payloads exercise the full entropy path — Huffman
+literals, FSE sequence tables, repeat offsets.  The shared-dictionary
+variant trains and compresses through libzstd (ctypes), since pyarrow
+has no dictionary API.
 
 Spark shape (the lz4shard discipline): corpus synthesized worker-side
 from the documents table, decode + per-row reduction fused in one
@@ -28,11 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import pyarrow as pa
+
 from inception_spark.sources import fanout
-from inception_spark.operators.zstdcodec import (
-    decode_zstd_frame,
-    encode_zstd_store,
-)
+from inception_spark.sources.compression import _libzstd, decompress
 
 _CORPUS_SCHEMA = T.StructType(
     [
@@ -43,40 +39,10 @@ _CORPUS_SCHEMA = T.StructType(
     ]
 )
 
-_LIB = None
-_LIB_TRIED = False
-
-
-def _libzstd():
-    """Executor-cached libzstd handle, or None where absent."""
-    global _LIB, _LIB_TRIED
-    if not _LIB_TRIED:
-        _LIB_TRIED = True
-        try:
-            import ctypes
-
-            z = ctypes.CDLL("libzstd.so.1")
-            z.ZSTD_compress.restype = ctypes.c_size_t
-            z.ZSTD_compressBound.restype = ctypes.c_size_t
-            z.ZSTD_isError.restype = ctypes.c_uint
-            _LIB = z
-        except OSError:
-            _LIB = None
-    return _LIB
-
-
 def _compress(text: bytes, level: int) -> bytes:
-    z = _libzstd()
-    if z is None:
-        return encode_zstd_store(text)
-    import ctypes
-
-    cap = z.ZSTD_compressBound(len(text))
-    dst = ctypes.create_string_buffer(cap)
-    n = z.ZSTD_compress(dst, cap, text, len(text), level)
-    if z.ZSTD_isError(n):
-        raise RuntimeError("libzstd compression failed")
-    return dst.raw[:n]
+    return pa.Codec("zstd", compression_level=level).compress(
+        text, asbytes=True
+    )
 
 
 def synth_zstd_corpus(
@@ -84,8 +50,7 @@ def synth_zstd_corpus(
 ) -> DataFrame:
     """Deterministic per-document zstd frame of the UTF-8 text: level
     19 on doc_id % 3 == 0 (denser entropy tables), level 1 otherwise;
-    shard = doc_id mod 5.  Worker-side synthesis, libzstd preferred,
-    store-mode fallback."""
+    shard = doc_id mod 5.  Worker-side synthesis."""
     src = docs.select(id_col, text_col).where(F.col(text_col).isNotNull())
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -131,7 +96,7 @@ def _decode_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows: dict[int, list[int]] = {}
         for sh, hi, p in zip(pdf["shard"], pdf["hi_level"], pdf["payload"]):
-            decoded = decode_zstd_frame(bytes(p))
+            decoded = decompress(bytes(p), "zstd")
             acc = rows.setdefault(int(sh), [0, 0, 0, 0])
             acc[0] += 1
             acc[1] += len(decoded)
@@ -174,9 +139,8 @@ def zstd_from_partials(parts: DataFrame) -> DataFrame:
 
 def zstd_shard_stats(docs: DataFrame) -> DataFrame:
     """REAL zstd decode, driver-visibly oracle-checked: compress every
-    document's text worker-side (libzstd levels 1/19 where present —
-    the full Huffman/FSE path — store-mode frames otherwise), decode
-    back through the RFC 8878 transcription, and aggregate per shard.
+    document's text worker-side (levels 1/19 — the full Huffman/FSE
+    path), decode it back, and aggregate per shard.
     The oracle computes the same stats directly from documents.text —
     a decoder defect hash-mismatches or fails the decode outright."""
     return zstd_from_partials(zstd_partials(synth_zstd_corpus(docs)))
@@ -243,14 +207,11 @@ def zstd_dict_stats(docs: DataFrame, *, n_train: int = 200) -> DataFrame:
     ZDICT dictionary is trained on the first ``n_train`` docs (by
     doc_id — a deterministic, control-plane-sized collect), broadcast
     as plan state, and every document's text is dict-compressed
-    worker-side with libzstd, then decoded back through our
-    :class:`~inception_spark.operators.zstdcodec.ZstdDict` machinery
-    (dict entropy seeding + dict-window matches).  Stats mirror
-    zstd_shard_stats so the oracle is the same closed form — a
-    dictionary-path defect hash-mismatches or fails outright."""
+    worker-side with libzstd, then decoded back through libzstd's
+    dictionary decoder (dict entropy seeding + dict-window matches).
+    Stats mirror zstd_shard_stats so the oracle is the same closed
+    form — a dictionary-path defect hash-mismatches or fails outright."""
     from typing import Iterator as _It
-
-    from inception_spark.operators.zstdcodec import ZstdDict
 
     sample = [
         str(r["text"]).encode("utf-8")
@@ -264,13 +225,12 @@ def zstd_dict_stats(docs: DataFrame, *, n_train: int = 200) -> DataFrame:
     src = docs.select("doc_id", "text").where(F.col("text").isNotNull())
 
     def fold(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        zd = ZstdDict(d) if d else None
         for pdf in batches:
             rows: dict[int, list[int]] = {}
             for i, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
                 raw = str(t).encode("utf-8")
                 frame = _compress_with_dict(raw, d, 3)
-                decoded = decode_zstd_frame(frame, dictionary=zd)
+                decoded = decompress(frame, "zstd", dictionary=d or None)
                 assert decoded == raw
                 acc = rows.setdefault(int(i) % 5, [0, 0, 0, 0])
                 acc[0] += 1
