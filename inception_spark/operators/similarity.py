@@ -8,8 +8,10 @@
   bucketing.  Probes only the query's bucket, so the scan touches
   ~1/2^bits of the data; :func:`ann_lsh_multiprobe_topk` widens the probe
   to buckets within r bit flips (the recall dial).  Hyperplanes are
-  generated from a fixed seed and inlined as literals, which keeps the
-  operator deterministic and lets the DuckDB oracle replay it exactly.
+  generated from a fixed seed and inlined as one folded literal per
+  vector (like every query vector: a CSV string cast to array<double>,
+  one py4j call instead of one per element), which keeps the operator
+  deterministic and lets the DuckDB oracle replay it exactly.
 * :func:`knn_join` — batch k-NN: every query row gets its top-k neighbors
   (window over blocked candidate pairs).
 * quantization ladder — :func:`sq_topk` (int8 scalar quantization, 4×
@@ -23,9 +25,14 @@
 
 No UDFs anywhere — ``aggregate``/``zip_with`` dot products vectorize in
 codegen; an Arrow pandas-UDF variant would only win past ~10k dims.
+Every ``cosine(<column>, <query>)`` scores through
+:func:`_cosine_to_query`: one parsed expression with the query's norm
+folded in as a constant, bit-identical to ``vectors.cosine``.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -34,8 +41,45 @@ from pyspark.sql import functions as F
 from inception_spark.functions.vectors import cosine, dot
 
 
+def _query_vec_sql(qv: list[float]) -> str:
+    # one CSV string literal cast to array<double>: Catalyst folds it into
+    # one array literal, built with one py4j call instead of one per
+    # element; repr round-trips every double ('nan', 'inf', '-0.0' too)
+    if not len(qv):
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    csv = ",".join(repr(float(x)) for x in qv)
+    return f"CAST(split('{csv}', ',') AS ARRAY<DOUBLE>)"
+
+
 def _query_vec_col(qv: list[float]):
-    return F.array(*[F.lit(float(x)) for x in qv])
+    return F.expr(_query_vec_sql(qv))
+
+
+def _cosine_to_query(name: str, qv: list[float]):
+    """``cosine(F.col(name), q)`` for a constant query, as one parsed
+    expression with ``norm(q)`` computed here: the same left-to-right
+    double sum from 0.0 that Catalyst runs, and both square roots are
+    correctly rounded, so every score is bit-identical while no row
+    recomputes the query's norm."""
+    acc = 0.0
+    for x in qv:
+        acc += float(x) * float(x)
+    nq = repr(math.sqrt(acc))
+    c = "`" + name.replace("`", "``") + "`"
+    dot_sql = (
+        f"aggregate(zip_with({c}, {_query_vec_sql(qv)}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, "
+        "(acc, x) -> acc + coalesce(x, 0D))"
+    )
+    den_sql = (
+        f"(sqrt(aggregate({c}, 0D, (acc, x) -> acc + "
+        "coalesce(CAST(x AS DOUBLE) * CAST(x AS DOUBLE), 0D)))"
+        f" * CAST('{nq}' AS DOUBLE))"
+    )
+    return F.expr(
+        f"CASE WHEN {den_sql} != 0D THEN {dot_sql} / {den_sql} "
+        "ELSE CAST(NULL AS DOUBLE) END"
+    )
 
 
 def cosine_topk(
@@ -49,10 +93,9 @@ def cosine_topk(
     """Exact top-k by cosine: (vec_id, score), deterministic tie-break on
     id.  Score rounded to 6 decimals BEFORE ranking so the ordering (and
     therefore the selected set) is reproducible across engines."""
-    q = _query_vec_col(query_vec)
     scored = df.select(
         F.col(id_col).alias("vec_id"),
-        F.round(cosine(F.col(vec_col), q), 6).alias("score"),
+        F.round(_cosine_to_query(vec_col, query_vec), 6).alias("score"),
     )
     # orderBy+limit compiles to TakeOrderedAndProject (distributed
     # per-partition top-k + k-row merge); a global row_number window would
@@ -74,7 +117,7 @@ def lsh_bucket_expr(vec_col, planes: np.ndarray):
     """Integer bucket id: sign bit per hyperplane, little-endian packed."""
     acc = F.lit(0).cast("long")
     for i, p in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in p])
+        lit = _query_vec_col(p)
         acc = acc + F.when(dot(vec_col, lit) > 0, F.lit(2**i).cast("long")).otherwise(0)
     return acc
 
@@ -370,10 +413,9 @@ def semantic_search(
     Returns (*id_cols, score, rank).  Stub and real encoders both produce
     L2-normalized vectors, so cosine reduces to the dot product — but we
     normalize anyway to stay correct for arbitrary vector columns."""
-    q = _query_vec_col(query_vec)
     scored = chunk_embeddings.select(
         *id_cols,
-        F.round(cosine(F.col(vec_col), q), 6).alias("score"),
+        F.round(_cosine_to_query(vec_col, query_vec), 6).alias("score"),
     )
     order = [F.desc("score")] + [F.asc(c) for c in id_cols]
     top = scored.orderBy(*order).limit(k)  # TakeOrderedAndProject
@@ -463,12 +505,11 @@ def ivf_flat_topk(
     cent, cell = _ivf_cells(
         df, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
     )
-    q = _query_vec_col(query_vec)
     probe = (
         cent.select(
             "cid",
             F.coalesce(
-                F.round(cosine(F.col("cvec"), q), 6), F.lit(-2.0)
+                F.round(_cosine_to_query("cvec", query_vec), 6), F.lit(-2.0)
             ).alias("qs"),
         )
         .orderBy(F.desc("qs"), F.asc("cid"))
@@ -524,13 +565,12 @@ def ivf_flat_topk_pruned(
     Bit-identical to :func:`ivf_flat_topk` on the raw table: same seeds,
     same rounded-cosine probe ordering, same exact rescore."""
     cent = spark.read.parquet(f"{path}/centroids")
-    q = _query_vec_col(query_vec)
     probe = [
         r["cid"]
         for r in cent.select(
             "cid",
             F.coalesce(
-                F.round(cosine(F.col("cvec"), q), 6), F.lit(-2.0)
+                F.round(_cosine_to_query("cvec", query_vec), 6), F.lit(-2.0)
             ).alias("qs"),
         )
         .orderBy(F.desc("qs"), F.asc("cid"))
@@ -1094,7 +1134,7 @@ def random_projection(
     The standard pre-reduce for ANN at scale: distances are preserved
     within (1±eps) w.h.p., and a 64→16 projection cuts exact-scan flops
     and candidate-rerank bandwidth 4×.  The plane matrix is seeded and
-    inlined as plan literals, so the operator is a ZERO-shuffle codegen
+    inlined as one folded literal per plane, so the operator is a ZERO-shuffle codegen
     map (same execution shape as pq_encode) and the DuckDB oracle
     replays it verbatim.  Elements rounded to 6 dp like every score."""
     planes = projection_planes(dim, out_dim=out_dim, seed=seed)
@@ -1103,7 +1143,7 @@ def random_projection(
             F.round(
                 dot(
                     F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in p]),
+                    _query_vec_col(p),
                 ),
                 6,
             )
@@ -1198,12 +1238,11 @@ def ivf_pq_topk(
     cent, cell = _ivf_cells(
         df, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
     )
-    q = _query_vec_col(query_vec)
     probe = (
         cent.select(
             "cid",
             F.coalesce(
-                F.round(cosine(F.col("cvec"), q), 6), F.lit(-2.0)
+                F.round(_cosine_to_query("cvec", query_vec), 6), F.lit(-2.0)
             ).alias("qs"),
         )
         .orderBy(F.desc("qs"), F.asc("cid"))
@@ -1273,14 +1312,13 @@ def ivf_pq_topk_over_codes(
     pruning over code bytes — the float column does not exist in the
     layout at all.  Bit-identical to :func:`ivf_pq_topk` on the raw
     table (same seeds, same probe ordering, same integer ADC)."""
-    q = _query_vec_col(query_vec)
     cent = spark.read.parquet(f"{path}/centroids")
     probe = [
         r["cid"]
         for r in cent.select(
             "cid",
             F.coalesce(
-                F.round(cosine(F.col("cvec"), q), 6), F.lit(-2.0)
+                F.round(_cosine_to_query("cvec", query_vec), 6), F.lit(-2.0)
             ).alias("qs"),
         )
         .orderBy(F.desc("qs"), F.asc("cid"))
@@ -1773,9 +1811,7 @@ def maxsim_topk(
     ]
     per_q = []
     for s in range(n_subvecs):
-        qlit = F.array(
-            *[F.lit(float(x)) for x in query_vec[s * sub:(s + 1) * sub]]
-        )
+        qlit = _query_vec_col(query_vec[s * sub:(s + 1) * sub])
         per_q.append(F.greatest(*[cosine(d, qlit) for d in doc_slices]))
     score = F.round(reduce(operator.add, per_q), 6)
     scored = df.select(
@@ -1908,12 +1944,11 @@ def mmr_rerank(
         raise ValueError("need 1 <= k <= pool")
     if not 0 <= lambda_milli <= 1000:
         raise ValueError("lambda_milli in [0, 1000]")
-    q = _query_vec_col(query_vec)
     cand = (
         df.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("v"),
-            F.round(cosine(F.col(vec_col), q) * 1e6, 0)
+            F.round(_cosine_to_query(vec_col, query_vec) * 1e6, 0)
             .cast("long")
             .alias("rel"),
         )
@@ -2094,11 +2129,10 @@ def binary_quantize_topk(
     cand = coded.orderBy(F.asc("hamming"), F.asc("vec_id")).limit(
         int(rerank_factor) * int(k)
     )
-    q = _query_vec_col(query_vec)
     reranked = cand.select(
         "vec_id",
         "hamming",
-        F.round(cosine(F.col("v"), q), 6).alias("score"),
+        F.round(_cosine_to_query("v", query_vec), 6).alias("score"),
     ).orderBy(F.desc("score"), F.asc("vec_id")).limit(int(k))
     w = Window.orderBy(F.desc("score"), F.asc("vec_id"))
     return reranked.withColumn(

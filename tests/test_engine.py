@@ -347,3 +347,52 @@ def test_rrf_fuse_empty_input_rejected():
 
     with pytest.raises(ValueError, match="rrf_fuse needs"):
         rrf_fuse([])
+
+
+def test_stub_vectors_match_fresh_random_state_across_threads():
+    """seeded_unit_vector reseeds one per-thread RandomState; every vector
+    must still equal the frozen formula RandomState(seed).standard_normal
+    (normalized, float32), also after an odd-length draw left a cached
+    gaussian in the reused state and when eight threads encode at once."""
+    import hashlib
+    import sys
+    import threading
+
+    from inception_spark.operators import encoding
+
+    def frozen(data: bytes, dim: int) -> np.ndarray:
+        seed = int.from_bytes(hashlib.md5(data).digest()[:4], "big")
+        v = np.random.RandomState(seed).standard_normal(dim)
+        return (v / (float(np.linalg.norm(v)) or 1.0)).astype(np.float32)
+
+    texts = [f"doc {i} " * (i % 7) for i in range(300)]
+    enc = HashingStubEncoder(dim=DEFAULT_CONFIG.embedding_dim)
+    want = np.stack([frozen(t.encode("utf-8"), enc.dim) for t in texts])
+    assert np.array_equal(enc.encode(texts), want)
+    encoding.seeded_unit_vector(b"odd", 3)  # leaves a cached gaussian
+    assert np.array_equal(enc.encode(texts), want)
+
+    got = {}
+
+    def work(name, order):
+        for _ in range(3):
+            got[name] = enc.encode([texts[i] for i in order])
+            encoding.seeded_unit_vector(b"odd", 5)
+
+    orders = {
+        f"t{j}": list(np.random.RandomState(j).permutation(len(texts)))
+        for j in range(8)
+    }
+    threads = [threading.Thread(target=work, args=a) for a in orders.items()]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    for name, order in orders.items():
+        assert np.array_equal(got[name], want[order]), name
